@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Jobs
 import graft.operators._
 import graft.sinks.Sinks
 import graft.sources.Fasta
@@ -19,6 +20,20 @@ import org.apache.spark.sql.functions._
   *  6. variant calling (`MSA_Reader.py`) → [[VariantCalling.callAgainstCluster]]
   *  7. reports (`MSA_Reader.py:806–1162`) → [[Reports]]
   *  8. weekly time series (`Time_Series.py`) → [[VariantTimeSeries]]
+  *
+  * Independent Spark actions overlap through [[graft.core.Jobs]]: each
+  * one plans to few, small tasks (a tiny MSA, AQE-coalesced aggregates,
+  * `coalesce(1)` sinks), so run one after another they leave most cores
+  * idle. What overlaps:
+  *  - [[prepare]]: the partitioned FASTA write and the clusters CSV,
+  *    two sinks over the same filtered scan;
+  *  - [[analyzeMsa]]: the reference-cluster lookup and the sequence
+  *    total, then, once the cached events are materialized, all eight
+  *    report, matrix, heatmap and combo sinks.
+  * The only ordering kept is data dependence: the reference row needs the
+  * reference cluster, the events need the reference row. The events are
+  * materialized before the fan-out so that one job fills the cache instead
+  * of every concurrent consumer racing to compute it.
   */
 object Pipeline {
 
@@ -35,11 +50,12 @@ object Pipeline {
       .filter(length(col("seq")) >= col("ref_len") - lengthDelta &&
         length(col("seq")) < col("ref_len") + lengthDelta)
       .filter(Filters.charRatio(col("seq"), "X") <= ambiguityCutoff)
-    Fasta.writePartitioned(filtered, "protein", s"$outDir/filtered")
     val clusters = Dedup.exactClusters(
       filtered.withColumn("id", col("accession")), col("id"), col("seq"))
-    Sinks.writeCsv(clusters.select("cluster_id", "cluster_size", "first_id"),
-      s"$outDir/clusters")
+    Jobs.concurrently(
+      () => Fasta.writePartitioned(filtered, "protein", s"$outDir/filtered"),
+      () => Sinks.writeCsv(clusters.select("cluster_id", "cluster_size", "first_id"),
+        s"$outDir/clusters"))
     filtered
   }
 
@@ -114,53 +130,60 @@ object Pipeline {
     val clusterHeaders = aligned.toDF().select(
       col("clusterId"), col("clusterSize"))
 
-    // stage 5: which cluster holds the reference isolate
-    val refClusterId = RefCluster.find(
-      clusterMap.withColumnRenamed("accession", "input_id"), refIsolateId)
+    // stage 5: which cluster holds the reference isolate; the sequence
+    // total rides along
+    var refClusterId = ""
+    var total = 0L
+    Jobs.concurrently(
+      () => refClusterId = RefCluster.find(
+        clusterMap.withColumnRenamed("accession", "input_id"), refIsolateId),
+      () => total = Reports.totalSequences(clusterHeaders).head().getLong(0))
     val refRow = aligned.filter(col("clusterId") === refClusterId)
       .select("seq", "clusterSize").head()
 
     // stage 6: embarrassingly-parallel variant calling, cached for fan-out
     val events = VariantCalling.callAll(aligned, refRow.getString(0))
       .filter(col("clusterId") =!= refClusterId).cache()
-
-    // stage 7: report fan-out off the cached events
-    val total = Reports.totalSequences(clusterHeaders).head().getLong(0)
-    Sinks.writeCsv(VariantCalling.toRawTsvShape(events),
-      s"$outDir/variants_raw", sep = "\t")
-    Sinks.writeBlockReport(
-      Reports.infoByCluster(events).select(
-        concat(col("cluster_id"), lit(", "), col("cluster_size"),
-          lit(" sequences")).as("hdr"), col("codes")),
-      "hdr", "codes", s"$outDir/info_by_cluster")
-    Sinks.writeCsv(Reports.mutationCsv(events, total), s"$outDir/all_by_code")
-    val refGapless = refRow.getString(0).replace("-", "")
-    Sinks.writeCsv(Reports.perPositionTable(events, refGapless, total),
-      s"$outDir/per_position")
-    Sinks.writeCsv(Reports.pymolStrings(
-      Reports.perPositionTable(events, refGapless, total)), s"$outDir/pymol")
-
-    // stage 8: weekly matrices (every region + Worldwide, one pass)
-    val per = VariantTimeSeries.variantsPerCluster(events, refClusterId,
-      refRow.getInt(1))
-    val joined = VariantTimeSeries.joinMetadata(meta, clusterMap, per)
-    val wm = VariantTimeSeries.weeklyMatrix(joined)
-    Sinks.writeCsv(wm.orderBy("region", "code", "week_start"),
-      s"$outDir/weekly_matrix")
-    // stage 8b: the reference's styled heatmap table (S10,
-    // Time_Series.py:813–837) over the Worldwide share matrix — week
-    // columns are report-bounded, so the explicit pivot value list and
-    // the xlsx sink's driver-side collect are safe by construction
-    val global = wm.filter(col("region") === "Worldwide")
-    val weeks = global.select("week_start").distinct()
-      .orderBy("week_start").collect().map(_.get(0).toString)
-    if (weeks.nonEmpty)
-      graft.sinks.Xlsx.writeHeatmap(
-        global.groupBy("code").pivot("week_start", weeks.toSeq)
-          .sum("share").na.fill(0.0).orderBy("code"),
-        s"$outDir/heatmap_table.xlsx", "Global")
-    Sinks.writeCsv(VariantTimeSeries.weeklyCombos(joined)
-      .orderBy("region", "week_start", "combo"), s"$outDir/weekly_combos")
-    events.unpersist()
+    try {
+      events.count()
+      val refGapless = refRow.getString(0).replace("-", "")
+      // stage 8: weekly matrices (every region + Worldwide, one pass)
+      val per = VariantTimeSeries.variantsPerCluster(events, refClusterId,
+        refRow.getInt(1))
+      val joined = VariantTimeSeries.joinMetadata(meta, clusterMap, per)
+      val wm = VariantTimeSeries.weeklyMatrix(joined)
+      // stages 7 and 8: every report and matrix sink off the cached events
+      Jobs.concurrently(
+        () => Sinks.writeCsv(VariantCalling.toRawTsvShape(events),
+          s"$outDir/variants_raw", sep = "\t"),
+        () => Sinks.writeBlockReport(
+          Reports.infoByCluster(events).select(
+            concat(col("cluster_id"), lit(", "), col("cluster_size"),
+              lit(" sequences")).as("hdr"), col("codes")),
+          "hdr", "codes", s"$outDir/info_by_cluster"),
+        () => Sinks.writeCsv(Reports.mutationCsv(events, total), s"$outDir/all_by_code"),
+        () => Sinks.writeCsv(Reports.perPositionTable(events, refGapless, total),
+          s"$outDir/per_position"),
+        () => Sinks.writeCsv(Reports.pymolStrings(
+          Reports.perPositionTable(events, refGapless, total)), s"$outDir/pymol"),
+        () => Sinks.writeCsv(wm.orderBy("region", "code", "week_start"),
+          s"$outDir/weekly_matrix"),
+        // stage 8b: the reference's styled heatmap table (S10,
+        // Time_Series.py:813–837) over the Worldwide share matrix — week
+        // columns are report-bounded, so the explicit pivot value list and
+        // the xlsx sink's driver-side collect are safe by construction
+        () => {
+          val global = wm.filter(col("region") === "Worldwide")
+          val weeks = global.select("week_start").distinct()
+            .orderBy("week_start").collect().map(_.get(0).toString)
+          if (weeks.nonEmpty)
+            graft.sinks.Xlsx.writeHeatmap(
+              global.groupBy("code").pivot("week_start", weeks.toSeq)
+                .sum("share").na.fill(0.0).orderBy("code"),
+              s"$outDir/heatmap_table.xlsx", "Global")
+        },
+        () => Sinks.writeCsv(VariantTimeSeries.weeklyCombos(joined)
+          .orderBy("region", "week_start", "combo"), s"$outDir/weekly_combos"))
+    } finally events.unpersist()
   }
 }

@@ -12,13 +12,15 @@ package graft
   * Usage: runMain graft.QueryTimer <q1,q2,...> [sfDir] [reps] [--noop]
   */
 object QueryTimer {
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    // flags may stand anywhere, also in place of an optional positional
+    val (flags, args) = argv.partition(_.startsWith("--"))
     val names = args.headOption.getOrElse(sys.error(
       "usage: QueryTimer <q1,q2,...> [sfDir] [reps] [--noop]"))
       .split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val noop = args.contains("--noop")
+    val noop = flags.contains("--noop")
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val spark = GraftSession.local("graft-query-timer")

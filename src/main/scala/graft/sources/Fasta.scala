@@ -1,8 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,29 +13,19 @@ case class FastaRecord(header: String, seq: String)
   * Read path: the reference parses records with Biopython
   * (`/root/reference/Sequence_Filter.py:57`, `MSA_Reader.py:1179`) or a
   * hand-rolled two-pass line loop (`Protein_File_Splitter.py:49–109`) —
-  * single-threaded, whole-file. Here we set the Hadoop record delimiter to
-  * `"\n>"` so records never straddle split boundaries: every input split of
-  * a 100 TB FASTA parses independently and in parallel, no driver pass.
+  * single-threaded, whole-file. Here there is one reader, the DataSourceV2
+  * source `fasta` ([[fasta.FastaDataSource]]): records are delimited by
+  * `"\n>"` and each split parses the records that begin in it, so every
+  * split of a 100 TB FASTA parses independently and in parallel, no driver
+  * pass. Splits are sized like Spark's own file sources
+  * ([[fasta.FastaScan]]): a file larger than
+  * `spark.sql.files.openCostInBytes` (4 MB) already spreads over cores.
   */
 object Fasta {
 
   def read(spark: SparkSession, path: String): Dataset[FastaRecord] = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set("textinputformat.record.delimiter", "\n>")
-    val raw = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[TextInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
-      .map { case (_, t) => t.toString } // Text is reused by Hadoop; copy now
     import spark.implicits._
-    raw.filter(_.nonEmpty).map { rec =>
-      // Only the file's first record keeps its leading '>'.
-      val body = if (rec.charAt(0) == '>') rec.substring(1) else rec
-      val nl = body.indexOf('\n')
-      if (nl < 0) FastaRecord(body.trim, "")
-      else FastaRecord(
-        body.substring(0, nl).replace("\r", "").trim,
-        body.substring(nl + 1).replaceAll("[\r\n]", ""))
-    }.toDS()
+    spark.read.format("fasta").load(path).as[FastaRecord]
   }
 
   /** GISAID allprot header fields (SURVEY.md S2): ` | `-separated; protein at

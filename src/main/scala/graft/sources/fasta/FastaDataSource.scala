@@ -7,6 +7,8 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.{TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -15,12 +17,13 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSourceV2 FASTA reader: `spark.read.format("fasta").load(path)` →
   * DataFrame(header string, seq string) (SURVEY.md S1).
   *
-  * Files are split at `maxSplitBytes` boundaries like any splittable text
-  * format; each split is read with a Hadoop `LineRecordReader` using the
+  * Files are split like any splittable text format (sizing: [[FastaScan]]);
+  * each split is read with a Hadoop `LineRecordReader` using the
   * `"\n>"` record delimiter, which owns the record that STRADDLES its
   * start boundary to the previous split — the same contract that makes a
   * 100 TB FASTA parse in parallel with no coordination (and the reason a
@@ -59,56 +62,81 @@ class FastaScanBuilder(path: String, options: CaseInsensitiveStringMap)
   private var required: StructType = FastaTable.schema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = {
-    val maxSplit = Option(options.get("maxSplitBytes"))
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
-    new FastaScan(path, required, maxSplit)
-  }
+  override def build(): Scan =
+    new FastaScan(path, required, Option(options.get("maxSplitBytes")).map(_.toLong))
 }
 
 case class FastaInputPartition(file: String, start: Long, length: Long)
   extends InputPartition
 
-class FastaScan(path: String, required: StructType, maxSplitBytes: Long)
+/** Plans one input partition per split of every matched file. Names
+  * starting with `_` or `.` are skipped, as Hadoop's `FileInputFormat`
+  * does, so a Spark output directory reads without its `_SUCCESS` marker
+  * and `.crc` checksums.
+  *
+  * Split size: the `maxSplitBytes` option when set; otherwise what Spark's
+  * file sources use (`FilePartition.maxSplitBytes`), from the session's
+  * existing settings: `min(spark.sql.files.maxPartitionBytes,
+  * max(spark.sql.files.openCostInBytes, bytes / parallelism))`, where each
+  * file counts its length plus the open cost and parallelism is
+  * `spark.sql.files.minPartitionNum`, else the default parallelism. A
+  * 15 MB FASTA on 3 cores thus reads as 3 splits, not 1.
+  */
+class FastaScan(path: String, required: StructType, maxSplitBytes: Option[Long])
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
+  // the session's Hadoop settings (core-site plus `spark.hadoop.*`), on the
+  // driver for listing and shipped to the readers, as Spark's file sources do
+  private val spark = SparkSession.active
+  private val hadoopConf = spark.sessionState.newHadoopConf()
+
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = new Configuration()
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
+    val fs = p.getFileSystem(hadoopConf)
     val matched: Array[FileStatus] =
       Option(fs.globStatus(p)).getOrElse(Array.empty)
     val files = matched.flatMap { st =>
       if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
       else Array(st)
-    }
+    }.filter(st => !st.getPath.getName.startsWith("_") &&
+      !st.getPath.getName.startsWith("."))
     require(files.nonEmpty, s"no FASTA input files at $path")
+    val splitBytes = maxSplitBytes.getOrElse {
+      val conf = spark.sessionState.conf
+      val openCost = conf.filesOpenCostInBytes
+      val bytes = files.map(_.getLen + openCost).sum
+      val parallelism = conf.filesMinPartitionNum
+        .getOrElse(spark.sparkContext.defaultParallelism)
+      math.min(conf.filesMaxPartitionBytes, math.max(openCost, bytes / parallelism))
+    }
     files.flatMap { st =>
       val len = st.getLen
-      (0L until math.max(len, 1L) by maxSplitBytes).map { off =>
+      (0L until math.max(len, 1L) by splitBytes).map { off =>
         FastaInputPartition(st.getPath.toString, off,
-          math.min(maxSplitBytes, len - off))
+          math.min(splitBytes, len - off))
       }
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FastaReaderFactory(required.fieldNames)
+    new FastaReaderFactory(required.fieldNames,
+      spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)))
 }
 
-class FastaReaderFactory(columns: Array[String]) extends PartitionReaderFactory {
+class FastaReaderFactory(columns: Array[String],
+    hadoopConf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new FastaPartitionReader(partition.asInstanceOf[FastaInputPartition], columns)
+    new FastaPartitionReader(partition.asInstanceOf[FastaInputPartition], columns,
+      hadoopConf.value.value)
 }
 
-class FastaPartitionReader(part: FastaInputPartition, columns: Array[String])
-    extends PartitionReader[InternalRow] {
+class FastaPartitionReader(part: FastaInputPartition, columns: Array[String],
+    conf: Configuration) extends PartitionReader[InternalRow] {
 
   private val reader = new LineRecordReader("\n>".getBytes("UTF-8"))
   locally {
-    val conf = new Configuration()
     val split = new FileSplit(new Path(part.file), part.start, part.length, Array.empty)
     val ctx = new TaskAttemptContextImpl(conf,
       new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))

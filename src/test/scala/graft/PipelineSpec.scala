@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -68,7 +70,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stages(("5_ts_total", "Spike")) == 20L) // middle week only
   }
 
-  test("analyzeMsa: reports + weekly matrix from an aligned MSA") {
+  /** Runs `analyzeMsa` on a 4-cluster MSA (clust0 holds the reference)
+    * into `out`. */
+  private def analyzeFixture(out: String): Unit = {
     import spark.implicits._
     val msa =
       """>clust0;size=1;
@@ -92,8 +96,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("EPI_3", "2021-01-12", "Europe"), ("EPI_4", "2021-01-13", "Asia"))
       .toDF("accession", "date", "region")
 
-    val out = "/tmp/graft_pipe_msa_out"
     Pipeline.analyzeMsa(spark, msaPath, "WIV04-ref", meta, clusterMap, out)
+  }
+
+  test("analyzeMsa: reports + weekly matrix from an aligned MSA") {
+    val out = "/tmp/graft_pipe_msa_out"
+    analyzeFixture(out)
 
     val byCode = spark.read.option("header", "true").csv(s"$out/all_by_code")
       .collect().map(r => r.getAs[String]("Code") -> r.getAs[String]("Percentage")).toMap
@@ -111,5 +119,34 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         zf.getEntry("xl/worksheets/sheet1.xml")).readAllBytes(), "UTF-8")
       assert(sheet.contains("F2L") && sheet.contains("colorScale"))
     } finally zf.close()
+  }
+
+  test("analyzeMsa: two runs write byte-identical outputs") {
+    // the sinks run as concurrent jobs; their outputs must not depend on
+    // which finishes first. Part-file names carry a per-write UUID, so
+    // files are keyed by their name without it; the xlsx zip stamps each
+    // entry with the write time, so it is compared entry by entry.
+    val dirs = Seq("/tmp/graft_pipe_msa_twice_a", "/tmp/graft_pipe_msa_twice_b")
+    dirs.foreach(analyzeFixture)
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+    def contents(root: String): Map[String, Seq[Byte]] = {
+      val base = java.nio.file.Paths.get(root)
+      val files = java.nio.file.Files.walk(base).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+      files.flatMap { f =>
+        val key = uuid.replaceAllIn(base.relativize(f).toString, "UUID")
+        if (key.endsWith(".xlsx")) {
+          val zf = new java.util.zip.ZipFile(f.toFile)
+          try zf.entries().asScala.toSeq.map(e =>
+            s"$key!${e.getName}" -> zf.getInputStream(e).readAllBytes().toSeq)
+          finally zf.close()
+        } else Seq(key -> java.nio.file.Files.readAllBytes(f).toSeq)
+      }.toMap
+    }
+    val Seq(a, b) = dirs.map(contents)
+    assert(a.keySet.exists(_.startsWith("weekly_combos/part-")))
+    assert(a.keySet.exists(_.startsWith("heatmap_table.xlsx!")))
+    assert(a.keySet == b.keySet)
+    a.keys.foreach(k => assert(a(k) == b(k), s"$k differs between runs"))
   }
 }
