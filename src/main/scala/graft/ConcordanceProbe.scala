@@ -17,24 +17,8 @@ object ConcordanceProbe {
     val spark = GraftSession.local("graft-concordance-probe")
     import spark.implicits._
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
-    def timedShuffled(stage: String)(f: => Long): Unit = {
-      Thread.sleep(800)
-      val before = shuffleBytes.get()
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500)
-      val mb = (shuffleBytes.get() - before) / 1048576.0
-      println(f"""{"stage":"$stage","rows":$rows,"sec":$sec%.2f,"shuffle_mb":$mb%.1f}""")
-    }
+    val shuffles = new ShuffleTimer(spark)
+    import shuffles.timedShuffled
     def exec(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()
 

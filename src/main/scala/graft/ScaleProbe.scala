@@ -690,28 +690,8 @@ object ScaleProbe {
     // exchange is an in-memory copy here, so also record SHUFFLE BYTES
     // WRITTEN — the quantity that becomes the network bottleneck on a
     // real cluster — via stage metrics.
-    // One always-registered listener + before/after snapshots: a
-    // register-per-stage listener MISSES metrics (stage-completed events
-    // for fast AQE jobs can land on the async bus after the action
-    // returns — measured as a false 0.0 MB on the count-distinct stage)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
-    def timedShuffled[T](stage: String)(f: => Long): Unit = {
-      Thread.sleep(800) // drain any previous stage's stragglers
-      val before = shuffleBytes.get()
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // let the async listener bus drain this job
-      val mb = (shuffleBytes.get() - before) / 1048576.0
-      println(f"""{"stage":"$stage","rows":$rows,"sec":$sec%.2f,"shuffle_mb":$mb%.1f}""")
-    }
+    val shuffles = new ShuffleTimer(spark)
+    import shuffles.timedShuffled
     // HONEST baseline first: Spark 4 already plans a PARTIAL
     // WindowGroupLimit below the exchange for row_number + rn<=k, so for
     // NARROW rows the window shape ships the same ~groups×k×partitions

@@ -10,10 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Filters {
 
-  /** F1 — host filter (`/root/reference/Sequence_Filter.py:124–125`). */
-  def hostFilter(df: DataFrame, hostCol: String, host: String = "Human"): DataFrame =
-    df.filter(col(hostCol) === host)
-
   /** F2 — length band, half-open `[refLen-delta, refLen+delta)` exactly as
     * `/root/reference/Sequence_Filter.py:86–88, 128` (lower inclusive, upper
     * exclusive).

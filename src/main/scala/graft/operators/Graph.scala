@@ -54,8 +54,7 @@ object Graph {
     * Dangling-node mass leaks (no redistribution) — deliberate, so the
     * recurrence stays a pure integer fold both engines agree on.
     */
-  def pageRank(edges: DataFrame, iterations: Int,
-               materialize: Boolean = true): DataFrame = {
+  def pageRank(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "pageRank needs at least one iteration")
     // The K iterations unroll into ONE plan in which the loop-invariant
     // relations appear at every level — without a lineage cut, the edge
@@ -69,18 +68,17 @@ object Graph {
     // blocks are executor-local and unreplicated — an executor loss
     // mid-computation fails the job instead of recomputing (rerun it);
     // that trade buys not re-executing the edge pipeline K times, the
-    // standard iterative-algorithm bargain. `materialize = false` opts
-    // out (single-iteration or plan-inspection uses — the dumped plan
-    // then shows the real scans instead of checkpointed RDDs).
+    // standard iterative-algorithm bargain. The other iterative operators
+    // below cut their loop invariants the same way, for the same reasons.
     // eager = false: the cut happens when the FIRST ACTION runs, not at
     // DataFrame construction — merely building the query (plan dumps,
     // schema inspection, registry iteration) must not launch Spark jobs.
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
-    val e = cut(edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src").isNotNull && col("dst").isNotNull))
-    val nodes = cut(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+      .localCheckpoint(eager = false)
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+      .localCheckpoint(eager = false)
     // Scalar cardinality for the teleport term. The node set is the graph
     // dimension (hosts, not documents) — counting it is a tiny aggregate,
     // not a data-sized collect.
@@ -90,8 +88,9 @@ object Graph {
     val teleport = (15L * base) / 100L
     // Fold outdeg into the edge relation once so each iteration joins two
     // relations, not three.
-    val withDeg = cut(e.join(
-      e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src")))
+    val withDeg = e.join(
+      e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src"))
+      .localCheckpoint(eager = false)
     var rank = nodes.withColumn("rank", lit(base))
     for (_ <- 1 to iterations) {
       val contribs = withDeg.join(rank, withDeg("src") === rank("node"))
@@ -126,28 +125,30 @@ object Graph {
     * 0/teleport literal column, no extra join in the loop. Output:
     * (node, rank) — nodes the seeds never reach hold rank 0. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iterations: Int, materialize: Boolean = true): DataFrame = {
+      iterations: Int): DataFrame = {
     require(iterations >= 1,
       "personalizedPageRank needs at least one iteration")
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
-    val e = cut(edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src").isNotNull && col("dst").isNotNull))
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+      .localCheckpoint(eager = false)
     val inGraph = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    val seedNodes = cut(seeds.select(col("node").cast("long"))
-      .distinct().join(inGraph, Seq("node"), "left_semi"))
+    val seedNodes = seeds.select(col("node").cast("long"))
+      .distinct().join(inGraph, Seq("node"), "left_semi")
+      .localCheckpoint(eager = false)
     val nSeeds = seedNodes.count()
     require(nSeeds > 0, "personalizedPageRank: no seed appears in the graph")
     val base = Scale / nSeeds
     val teleport = (15L * base) / 100L
     // Teleport folded into the node relation ONCE — the loop below
     // never touches the seed set again.
-    val nodes = cut(inGraph.join(
+    val nodes = inGraph.join(
         seedNodes.withColumn("__t", lit(teleport)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__t"), lit(0L)).as("teleport")))
-    val withDeg = cut(e.join(
-      e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src")))
+      .select(col("node"), coalesce(col("__t"), lit(0L)).as("teleport"))
+      .localCheckpoint(eager = false)
+    val withDeg = e.join(
+      e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src"))
+      .localCheckpoint(eager = false)
     var rank = nodes.select(col("node"),
       when(col("teleport") > 0L, lit(base)).otherwise(lit(0L)).as("rank"))
     for (_ <- 1 to iterations) {
@@ -189,15 +190,14 @@ object Graph {
     * plus two 1-row total broadcasts; loop invariants
     * localCheckpoint-cut. Output: (node, hub, auth) — nodes outside
     * every edge direction hold 0 on that side. */
-  def hits(edges: DataFrame, iterations: Int,
-      materialize: Boolean = true): DataFrame = {
+  def hits(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "hits needs at least one iteration")
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
-    val e = cut(edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src").isNotNull && col("dst").isNotNull).distinct())
-    val nodes = cut(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .where(col("src").isNotNull && col("dst").isNotNull).distinct()
+      .localCheckpoint(eager = false)
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+      .localCheckpoint(eager = false)
     val n = nodes.count()
     require(n > 0, "hits on an empty graph")
     var hub = nodes.withColumn("hub", lit(HitsScale / n))
@@ -210,11 +210,12 @@ object Graph {
         .groupBy(col(to).as("node"))
         .agg(sum(col(scoreCol)).as("__raw"))
       val tot = raw.agg(sum(col("__raw")).as("__tot"))
-      cut(nodes.join(raw, Seq("node"), "left")
+      nodes.join(raw, Seq("node"), "left")
         .crossJoin(broadcast(tot))
         .select(col("node"),
           expr(s"coalesce(__raw, 0L) * ${HitsScale}L div __tot")
-            .as(outCol)))
+            .as(outCol))
+        .localCheckpoint(eager = false)
     }
     for (_ <- 1 to iterations) {
       auth = step(hub, "hub", "src", "dst", "auth")
@@ -374,31 +375,80 @@ object Graph {
     * round d's plan doesn't re-derive rounds 1..d−1. maxDepth is a
     * small constant by contract (diameter probes, not transitive
     * closure). Output: (node, hops). */
-  def bfsLayers(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
-      materialize: Boolean = true): DataFrame = {
+  def bfsLayers(edges: DataFrame, seeds: DataFrame,
+      maxDepth: Int): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 16,
       s"bfsLayers needs 1 <= maxDepth <= 16, got $maxDepth")
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
-    val und = cut(orient(edges))
-    val adj = cut(und.select(col("u").as("a"), col("v").as("b"))
-      .union(und.select(col("v").as("a"), col("u").as("b"))))
+    val und = orient(edges).localCheckpoint(eager = false)
+    val adj = und.select(col("u").as("a"), col("v").as("b"))
+      .union(und.select(col("v").as("a"), col("u").as("b")))
+      .localCheckpoint(eager = false)
     // seeds restricted to nodes that exist in the graph, layer 0
     val nodes = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node"))).distinct()
-    var reached = cut(seeds.select(col("node").cast("long"))
+    var reached = seeds.select(col("node").cast("long"))
       .distinct().join(nodes, Seq("node"), "left_semi")
-      .withColumn("hops", lit(0L)))
+      .withColumn("hops", lit(0L))
+      .localCheckpoint(eager = false)
     var frontier = reached.select("node")
     for (d <- 1 to maxDepth) {
-      val next = cut(frontier.join(adj, frontier("node") === adj("a"))
+      val next = frontier.join(adj, frontier("node") === adj("a"))
         .select(col("b").as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti"))
-      reached = cut(reached.unionByName(
-        next.withColumn("hops", lit(d.toLong))))
+        .join(reached, Seq("node"), "left_anti")
+        .localCheckpoint(eager = false)
+      reached = reached.unionByName(
+        next.withColumn("hops", lit(d.toLong)))
+        .localCheckpoint(eager = false)
       frontier = next
     }
     reached
+  }
+
+  /** Synchronous label propagation (Raghavan et al., Phys. Rev. E
+    * 2007) — the community detector the graph block lacked: every node
+    * starts labeled with itself; each round it adopts the MOST FREQUENT
+    * label among its neighbors, ties broken by the SMALLEST label — a
+    * deterministic synchronous update (the async/random-order variants
+    * are not engine-portable; this one replays bit-for-bit, and an
+    * unrolled SQL mirror can replicate each round).
+    *
+    * `rounds` is a fixed unroll like [[pageRank]]/[[kcorePeel]] — LPA
+    * on real graphs stabilizes in a handful of sweeps, and a FIXED
+    * round count is what keeps the operator deterministic and the
+    * oracle finite. Isolated-from-the-join nodes keep their current
+    * label. Each round is one join + one count aggregation + one
+    * partitioned top-1 window over (node, label) pairs — edge-sized
+    * shuffles, no driver state; `localCheckpoint` truncates the
+    * lineage per round (the iterative-operator convention).
+    *
+    * Output: (node, label) — nodes sharing a label share a community. */
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
+    require(rounds >= 1 && rounds <= 8,
+      s"labelPropagation needs 1 <= rounds <= 8, got $rounds")
+    val und = edges
+      .select(col("src").as("u"), col("dst").as("v"))
+      .union(edges.select(col("dst").as("u"), col("src").as("v")))
+      .where(col("u") =!= col("v")).distinct()
+      .localCheckpoint(eager = false)
+    val nodes = und.select(col("u").as("node")).distinct()
+    var labels = nodes.withColumn("label", col("node"))
+      .localCheckpoint(eager = false)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("node")).orderBy(col("__c").desc, col("label").asc)
+    for (_ <- 1 to rounds) {
+      val next = und
+        .join(labels.withColumnRenamed("node", "v"), Seq("v"))
+        .groupBy(col("u").as("node"), col("label"))
+        .agg(count(lit(1)).as("__c"))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .select("node", "label")
+      labels = nodes.join(next, Seq("node"), "left")
+        .select(col("node"), coalesce(col("label"), col("node"))
+          .as("label"))
+        .localCheckpoint(eager = false)
+    }
+    labels
   }
 
   /** Bounded k-core peel over the UNDIRECTED graph: `rounds`
@@ -422,69 +472,20 @@ object Graph {
     * constant by contract (real-graph peel depths are shallow; raise
     * it when the degree column says so). Exact BIGINTs throughout.
     * Output: (node, degree) of the surviving subgraph. */
-  /** Synchronous label propagation (Raghavan et al., Phys. Rev. E
-    * 2007) — the community detector the graph block lacked: every node
-    * starts labeled with itself; each round it adopts the MOST FREQUENT
-    * label among its neighbors, ties broken by the SMALLEST label — a
-    * deterministic synchronous update (the async/random-order variants
-    * are not engine-portable; this one replays bit-for-bit, and an
-    * unrolled SQL mirror can replicate each round).
-    *
-    * `rounds` is a fixed unroll like [[pageRank]]/[[kcorePeel]] — LPA
-    * on real graphs stabilizes in a handful of sweeps, and a FIXED
-    * round count is what keeps the operator deterministic and the
-    * oracle finite. Isolated-from-the-join nodes keep their current
-    * label. Each round is one join + one count aggregation + one
-    * partitioned top-1 window over (node, label) pairs — edge-sized
-    * shuffles, no driver state; `localCheckpoint` truncates the
-    * lineage per round (the iterative-operator convention).
-    *
-    * Output: (node, label) — nodes sharing a label share a community. */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-      materialize: Boolean = true): DataFrame = {
-    require(rounds >= 1 && rounds <= 8,
-      s"labelPropagation needs 1 <= rounds <= 8, got $rounds")
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
-    val und = cut(edges
-      .select(col("src").as("u"), col("dst").as("v"))
-      .union(edges.select(col("dst").as("u"), col("src").as("v")))
-      .where(col("u") =!= col("v")).distinct())
-    val nodes = und.select(col("u").as("node")).distinct()
-    var labels = cut(nodes.withColumn("label", col("node")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("node")).orderBy(col("__c").desc, col("label").asc)
-    for (_ <- 1 to rounds) {
-      val next = und
-        .join(labels.withColumnRenamed("node", "v"), Seq("v"))
-        .groupBy(col("u").as("node"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select("node", "label")
-      labels = cut(nodes.join(next, Seq("node"), "left")
-        .select(col("node"), coalesce(col("label"), col("node"))
-          .as("label")))
-    }
-    labels
-  }
-
-  def kcorePeel(edges: DataFrame, k: Int, rounds: Int,
-      materialize: Boolean = true): DataFrame = {
+  def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"kcorePeel needs k >= 1, got $k")
     require(rounds >= 1 && rounds <= 16,
       s"kcorePeel needs 1 <= rounds <= 16, got $rounds")
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(eager = false) else df
-    var e = cut(orient(edges))
+    var e = orient(edges).localCheckpoint(eager = false)
     for (_ <- 1 to rounds) {
       val deg = e.select(col("u").as("node"))
         .union(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("degree"))
       val keep = deg.filter(col("degree") >= k.toLong).select("node")
-      e = cut(e
+      e = e
         .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
+        .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
+        .localCheckpoint(eager = false)
     }
     e.select(col("u").as("node"))
       .union(e.select(col("v").as("node")))

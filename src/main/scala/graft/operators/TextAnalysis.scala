@@ -92,7 +92,6 @@ object TextAnalysis {
 
   /** Quality components (length / punctuation / stopword / digit ratios),
     * each an exact ratio of two ints (single IEEE division). */
-  def charLen(text: Column): Column = length(text)
   def punctRatio(text: Column): Column =
     size(bpeishTokens(regexp_replace(text, "[A-Za-z0-9\\s]+", ""))).cast("double") /
       greatest(length(text), lit(1))

@@ -972,17 +972,6 @@ object TimeSeries {
         col("n_active").cast("double") / col("cohort_size").cast("double"))
   }
 
-  /** A6 — per-region AND global totals in ONE shuffle via `rollup` instead
-    * of the reference's repeat-per-continent loop (`Time_Series.py:323,
-    * 868–897`). The null-region row is the `Worldwide` total.
-    */
-  def rollupRegions(df: DataFrame, regionCol: Column, dateCol: Column,
-      worldwideLabel: String = "Worldwide"): DataFrame =
-    df.rollup(regionCol.as("region"), weekStart(dateCol).as("week_start"))
-      .agg(count(lit(1)).as("freq"))
-      .filter(col("week_start").isNotNull) // keep (region, week) + (null, week) sets
-      .withColumn("region", coalesce(col("region"), lit(worldwideLabel)))
-
   /** A7/W3 — share of the week's total, without a second scan: window sum
     * per week (`Time_Series.py:790–811`; zero-total weeks ⇒ 0.0).
     */
@@ -994,14 +983,6 @@ object TimeSeries {
         when(col("week_total") === 0, 0.0)
           .otherwise(col(freqCol).cast("double") / col("week_total")))
   }
-
-  /** A11 — variant-combination frequencies: `value_counts` of the sorted
-    * comma-joined list per week (`Time_Series.py:927–986`).
-    */
-  def comboFrequencies(df: DataFrame, dateCol: Column, listCol: Column): DataFrame =
-    df.groupBy(array_join(listCol, ",").as("combo"),
-        weekStart(dateCol).as("week_start"))
-      .agg(count(lit(1)).as("freq"))
 
   /** Sink-side pivot to the reference's wide matrix, with explicit week
     * labels as columns. Only call on an already-aggregated long frame.

@@ -41,15 +41,6 @@ object VariantTimeSeries {
       .when(varType === "delins", res(refAA) + res(varAA))
   }
 
-  /** A4 — total AA changes per cluster: one aggregation over events, no
-    * per-row per-code rescans (`/root/reference/Time_Series.py:516–562`). */
-  def aaChangesPerCluster(events: Dataset[VariantEvent]): DataFrame =
-    events.toDF()
-      .withColumn("aa", aaChanges(col("varType"), col("refAA"),
-        col("varAA"), col("refEnd")))
-      .groupBy(col("clusterId").as("cluster_id"))
-      .agg(sum(col("aa")).as("aa_changes"))
-
   /** J1+J2 — metadata ⋈ cluster map (inner, both large → sort-merge) then
     * ⋈ per-cluster variants (small → broadcast), plus F4 singleton
     * exclusion and F5 date validity

@@ -12,12 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** Render nullable columns with the reference's `"-"` sentinel
-    * (`/root/reference/MSA_Reader.py:716–724`). */
-  def withDashSentinels(df: DataFrame, cols: Seq[String]): DataFrame =
-    cols.foldLeft(df)((d, c) =>
-      d.withColumn(c, coalesce(col(c).cast("string"), lit("-"))))
-
   /** S8 — single-file CSV with header, matching the reference's
     * one-file-per-report contract (`/root/reference/Time_Series.py:671`).
     * `coalesce(1)` only touches the (small, already-aggregated) result. */

@@ -4,16 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** TSV scan family (SURVEY.md S4–S6). Explicit schemas everywhere — the
-  * reference reads metadata schema-less as all-strings
-  * (`/root/reference/Time_Series.py:481`); production paths here never
-  * infer. */
+/** TSV scan family (SURVEY.md S5–S6). Explicit schemas everywhere;
+  * production paths here never infer. */
 object Tsv {
-
-  /** S4 — metadata TSV with header; all columns string-typed at scan,
-    * callers cast what they need (the reference's `dtype="object"`). */
-  def readMetadata(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("sep", "\t").option("header", "true").csv(path)
 
   /** S5 — USEARCH `clusters.tsv`: headerless, six fixed columns
     * (`/root/reference/Time_Series.py:473–478`,

@@ -6,6 +6,8 @@ import java.util.zip.GZIPInputStream
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -16,6 +18,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSourceV2 WARC reader/writer: `spark.read.format("warc").load(path)`
   * and `df.write.format("warc").save(path)`.
@@ -50,6 +53,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * The write path implements the full DSv2 batch-write protocol
   * (temp file per task attempt, rename on driver commit, delete on
   * abort) so speculative/retried tasks can't tear an output file.
+  *
+  * Listing, reads and commits use the session's Hadoop settings
+  * (core-site plus `spark.hadoop.*` and session `fs.*` keys), broadcast to
+  * the executors as Spark's file sources do.
   */
 class WarcDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "warc"
@@ -115,10 +122,12 @@ class WarcScan(path: String, required: StructType, maxSplitBytes: Long)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
+  private val spark = SparkSession.active
+  private val hadoopConf = spark.sessionState.newHadoopConf()
+
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = new Configuration()
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
+    val fs = p.getFileSystem(hadoopConf)
     val matched: Array[FileStatus] =
       Option(fs.globStatus(p)).getOrElse(Array.empty)
     val files = matched.flatMap { st =>
@@ -144,12 +153,15 @@ class WarcScan(path: String, required: StructType, maxSplitBytes: Long)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required.fieldNames)
+    new WarcReaderFactory(required.fieldNames,
+      spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)))
 }
 
-class WarcReaderFactory(columns: Array[String]) extends PartitionReaderFactory {
+class WarcReaderFactory(columns: Array[String],
+    hadoopConf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new WarcPartitionReader(partition.asInstanceOf[WarcInputPartition], columns)
+    new WarcPartitionReader(partition.asInstanceOf[WarcInputPartition], columns,
+      hadoopConf.value.value)
 }
 
 /** One parsed record; `payload` is null when the scan pruned it. */
@@ -272,12 +284,11 @@ private[warc] class WarcScanner(in: InputStream, var offset: Long,
   }
 }
 
-class WarcPartitionReader(part: WarcInputPartition, columns: Array[String])
-    extends PartitionReader[InternalRow] {
+class WarcPartitionReader(part: WarcInputPartition, columns: Array[String],
+    conf: Configuration) extends PartitionReader[InternalRow] {
 
   private val wantPayload = columns.contains("payload")
   private val (stream, scanner) = {
-    val conf = new Configuration()
     val p = new Path(part.file)
     val fs = p.getFileSystem(conf)
     val raw = fs.open(p)
@@ -361,21 +372,20 @@ class WarcBatchWrite(path: String, schema: StructType, truncateFirst: Boolean)
   // Job-scoped file names so append can never rename onto a previous
   // job's output; driver-generated once, shipped to every task.
   private val jobId = java.util.UUID.randomUUID().toString.take(8)
+  private val spark = SparkSession.active
+  private val hadoopConf = spark.sessionState.newHadoopConf()
+  private lazy val fs = new Path(path).getFileSystem(hadoopConf)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val conf = new Configuration()
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
     if (truncateFirst && fs.exists(dir))
       fs.listStatus(dir).filter(_.getPath.getName.endsWith(".warc"))
         .foreach(st => fs.delete(st.getPath, false): Unit)
-    new WarcWriterFactory(path, schema, jobId)
+    new WarcWriterFactory(path, schema, jobId,
+      spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
     messages.foreach { case WarcCommitMessage(tmp, fin) =>
       val t = new Path(tmp)
       if (fs.exists(t) && !fs.rename(t, new Path(fin)))
@@ -384,8 +394,6 @@ class WarcBatchWrite(path: String, schema: StructType, truncateFirst: Boolean)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
-    val fs = new Path(path).getFileSystem(conf)
     messages.foreach {
       case WarcCommitMessage(tmp, _) =>
         val t = new Path(tmp)
@@ -395,10 +403,11 @@ class WarcBatchWrite(path: String, schema: StructType, truncateFirst: Boolean)
   }
 }
 
-class WarcWriterFactory(path: String, schema: StructType, jobId: String)
-    extends DataWriterFactory {
+class WarcWriterFactory(path: String, schema: StructType, jobId: String,
+    hadoopConf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new WarcDataWriter(path, schema, jobId, partitionId, taskId)
+    new WarcDataWriter(path, schema, jobId, partitionId, taskId,
+      hadoopConf.value.value)
 }
 
 /** Serializes rows as WARC/1.0 records. Promoted columns become their
@@ -407,12 +416,13 @@ class WarcWriterFactory(path: String, schema: StructType, jobId: String)
   * payload's actual byte count.
   */
 class WarcDataWriter(dir: String, schema: StructType, jobId: String,
-    partitionId: Int, taskId: Long) extends DataWriter[InternalRow] {
+    partitionId: Int, taskId: Long, conf: Configuration)
+    extends DataWriter[InternalRow] {
 
   private val tempPath = new Path(dir,
     f"_temporary-$jobId-part-$partitionId%05d-$taskId.warc")
   private val finalPath = new Path(dir, f"part-$jobId-$partitionId%05d.warc")
-  private val fs = tempPath.getFileSystem(new Configuration())
+  private val fs = tempPath.getFileSystem(conf)
   locally { fs.mkdirs(new Path(dir)): Unit }
   private val out = new java.io.BufferedOutputStream(fs.create(tempPath, true), 1 << 16)
 

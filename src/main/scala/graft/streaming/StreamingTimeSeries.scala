@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.operators.TimeSeries
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming ingestion mode (SURVEY.md §2.9): the batch weekly aggregates
   * re-expressed over `readStream` sources with event-time semantics.
@@ -68,6 +69,40 @@ object StreamingTimeSeries {
       }
   }
 
+  /** The at-least-once partials sink behind every `batch_id`-tagged
+    * `start*Query` here: each micro-batch of `stream` goes through every
+    * `(dir, partials)` pair, and the resulting rows are appended as
+    * parquet to `dir`, tagged with the batch's id.
+    *
+    * foreachBatch is AT-LEAST-ONCE: a crash between the append and the
+    * offset commit replays the batch on restart. Partials are
+    * deterministic per batch, so the replay appends identical rows under
+    * the SAME batch_id, and [[readPartials]] keeps one row per
+    * (keys, batch_id): replays collapse, while distinct batches that
+    * happen to produce equal rows survive (their batch_ids differ).
+    * Without that guard a sum would double-count. ([[latestWeekly]]
+    * instead keeps each cell's row from the latest batch.) Sinks whose
+    * merge is idempotent anyway (KMV re-min, top-k distinct ties,
+    * distinct-fact grids) write no batch_id and keep their own code. */
+  private def appendPartials(stream: DataStreamWriter[Row],
+      checkpointDir: String)(
+      sinks: (String, DataFrame => DataFrame)*): StreamingQuery =
+    stream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        sinks.foreach { case (dir, partials) =>
+          partials(batch).withColumn("batch_id", lit(batchId))
+            .write.mode("append").parquet(dir)
+        }
+      }
+      .start()
+
+  /** The rows [[appendPartials]] stored in `dir`, one per
+    * (`keys`, batch_id), without the batch_id column. */
+  private def readPartials(spark: SparkSession, dir: String,
+      keys: String*): DataFrame =
+    spark.read.parquet(dir).dropDuplicates(keys :+ "batch_id").drop("batch_id")
+
   /** Wire a weekly-count stream to an in-flight aggregation sink in
     * update mode; the caller controls trigger + termination. */
   def startWeeklyQuery(events: DataFrame, tsCol: String, keyCol: String,
@@ -85,14 +120,9 @@ object StreamingTimeSeries {
     * parquet is what this container has.) */
   def startWeeklyParquetQuery(events: DataFrame, tsCol: String, keyCol: String,
       targetDir: String, checkpointDir: String) =
-    weeklyCounts(events, tsCol, keyCol)
-      .writeStream.outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(weeklyCounts(events, tsCol, keyCol)
+      .writeStream.outputMode(OutputMode.Update()), checkpointDir)(
+      (targetDir, identity))
 
   /** Streaming distinct-count maintenance via mergeable HLL sketches —
     * the ingestion-time face of [[graft.operators.Sketches]]: each
@@ -106,16 +136,9 @@ object StreamingTimeSeries {
     * streaming spec proves it across micro-batches). */
   def startDistinctSketchQuery(events: DataFrame, groupCol: String,
       valueCol: String, targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Sketches
-          .distinctSketch(batch.toDF(), Seq(col(groupCol)), col(valueCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (targetDir, b => graft.operators.Sketches
+        .distinctSketch(b, Seq(col(groupCol)), col(valueCol))))
 
   /** Merge all per-batch sketches stored by [[startDistinctSketchQuery]]
     * into one distinct-count estimate per group. */
@@ -138,28 +161,13 @@ object StreamingTimeSeries {
   def startMomentPartialsQuery(events: DataFrame, groupCol: String,
       xCol: String, yCol: String, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .momentPartials(batch.toDF(), Seq(col(groupCol)), col(xCol), col(yCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (targetDir, b => graft.operators.Stats
+        .momentPartials(b, Seq(col(groupCol)), col(xCol), col(yCol))))
 
   /** Finalized whole-stream statistics from the partial rows stored by
-    * [[startMomentPartialsQuery]].
-    *
-    * foreachBatch is AT-LEAST-ONCE: a crash between the parquet append
-    * and the offset commit replays the batch on restart, appending a
-    * second (identical — the partials are deterministic exact integers)
-    * row per group under the SAME batch_id. Unlike the HLL sink (union
-    * is idempotent) a SUM would double-count, so the reader keeps one
-    * row per (group, batch_id) before merging — replays collapse, while
-    * distinct batches that happen to produce equal partials survive
-    * (their batch_ids differ). */
+    * [[startMomentPartialsQuery]], one row per (group, batch_id) before
+    * merging, so an at-least-once replay counts once (`appendPartials`). */
   def mergedMoments(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.momentsFromPartials(
@@ -178,8 +186,7 @@ object StreamingTimeSeries {
   private def mergedPartials(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.mergeMomentPartials(
-      Seq(spark.read.parquet(targetDir)
-        .dropDuplicates(groupCol, "batch_id").drop("batch_id")),
+      Seq(readPartials(spark, targetDir, groupCol)),
       Seq(groupCol))
 
   /** Streaming covariance maintenance — the ingestion face of
@@ -195,15 +202,9 @@ object StreamingTimeSeries {
     * integer moment sinks above). */
   def startCovarianceQuery(events: DataFrame, vecCol: String, dim: Int,
       targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Pca.covariancePartials(batch.toDF(), col(vecCol), dim)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (targetDir, b => graft.operators.Pca
+        .covariancePartials(b, col(vecCol), dim)))
 
   /** Whole-stream covariance model from the partials stored by
     * [[startCovarianceQuery]] — replay-guarded on batch_id, then the
@@ -211,8 +212,7 @@ object StreamingTimeSeries {
   def mergedCovariance(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, dim: Int): graft.operators.Pca.CovarianceModel =
     graft.operators.Pca.covarianceFromPartials(
-      spark.read.parquet(targetDir)
-        .dropDuplicates("batch_id").drop("batch_id"), dim)
+      readPartials(spark, targetDir), dim)
 
   /** Streaming Count-Min maintenance — the ingestion face of
     * [[graft.operators.Sketches.countMinSketch]]: each micro-batch
@@ -223,17 +223,9 @@ object StreamingTimeSeries {
     * before summing — the moment-sink posture, not the KMV one. */
   def startCmsQuery(events: DataFrame, keyCol: String, targetDir: String,
       checkpointDir: String, depth: Int = 4, width: Int = 1024) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Sketches
-          .countMinSketch(batch.toDF(), col(keyCol), depth, width)
-          .counters
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (targetDir, b => graft.operators.Sketches
+        .countMinSketch(b, col(keyCol), depth, width).counters))
 
   /** Whole-stream CMS from the per-batch counters stored by
     * [[startCmsQuery]] — replay-guarded counter-wise addition, returned
@@ -244,8 +236,7 @@ object StreamingTimeSeries {
       targetDir: String, depth: Int = 4,
       width: Int = 1024): graft.operators.Sketches.CmsSketch =
     graft.operators.Sketches.CmsSketch(
-      spark.read.parquet(targetDir)
-        .dropDuplicates("row", "bucket", "batch_id").drop("batch_id")
+      readPartials(spark, targetDir, "row", "bucket")
         .groupBy("row", "bucket").agg(sum(col("cnt")).as("cnt")),
       depth, width)
 
@@ -253,24 +244,14 @@ object StreamingTimeSeries {
     * [[graft.operators.Stats.welchPartials]]: each micro-batch reduces
     * once to its per-cohort BIGINT conditional moments (6 integers per
     * group) appended to the summary table. `cohortExpr` is a SQL boolean
-    * expression over the batch columns naming cohort 1. Same at-least-
-    * once posture as the moment sink: partials are deterministic, so a
-    * replayed batch appends an identical row under the same batch_id and
-    * the reader's (group, batch_id) dedup collapses it. */
+    * expression over the batch columns naming cohort 1. Replay-guarded
+    * like the moment sink (`appendPartials`). */
   def startWelchPartialsQuery(events: DataFrame, groupCol: String,
       xCol: String, cohortExpr: String, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .welchPartials(batch.toDF(), Seq(col(groupCol)), col(xCol),
-            expr(cohortExpr))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (targetDir, b => graft.operators.Stats
+        .welchPartials(b, Seq(col(groupCol)), col(xCol), expr(cohortExpr))))
 
   /** Whole-stream Welch's t from the partials stored by
     * [[startWelchPartialsQuery]] — replay-guarded merge, then the SAME
@@ -281,8 +262,7 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.welchFromPartials(
       graft.operators.Stats.mergeWelchPartials(
-        Seq(spark.read.parquet(targetDir)
-          .dropDuplicates(groupCol, "batch_id").drop("batch_id")),
+        Seq(readPartials(spark, targetDir, groupCol)),
         Seq(groupCol)))
 
   /** Streaming quantile maintenance — the ingestion face of
@@ -297,18 +277,9 @@ object StreamingTimeSeries {
   def startQuantileSketchQuery(events: DataFrame, groupCol: String,
       valueCol: String, targetDir: String, checkpointDir: String,
       scale: Int = 2) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Sketches
-          .quantileSketch(batch.toDF(), Seq(col(groupCol)), col(valueCol),
-            scale)
-          .buckets
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (targetDir, b => graft.operators.Sketches
+        .quantileSketch(b, Seq(col(groupCol)), col(valueCol), scale).buckets))
 
   /** Whole-stream quantile estimates from the bucket partials stored by
     * [[startQuantileSketchQuery]] — per-bucket addition across batches,
@@ -317,8 +288,7 @@ object StreamingTimeSeries {
   def mergedQuantiles(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String, qs: Seq[Double],
       scale: Int = 2): DataFrame = {
-    val merged = spark.read.parquet(targetDir)
-      .dropDuplicates(groupCol, "bucket", "batch_id").drop("batch_id")
+    val merged = readPartials(spark, targetDir, groupCol, "bucket")
       .groupBy(col(groupCol), col("bucket"), col("lb"))
       .agg(sum(col("cnt")).as("cnt"))
     graft.operators.Sketches.QuantileSketch(merged, scale, Seq(groupCol))
@@ -343,16 +313,9 @@ object StreamingTimeSeries {
     * (StreamingSpec pins it, replay included). */
   def startSeasonalPartialsQuery(events: DataFrame, tsCol: String,
       keyCol: String, targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        TimeSeries.weeklyFrequency(batch.toDF(), to_date(col(tsCol)),
-            col(keyCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (targetDir, b => TimeSeries
+        .weeklyFrequency(b, to_date(col(tsCol)), col(keyCol))))
 
   /** The merged dense weekly table behind [[mergedSeasonal]] /
     * [[mergedAnomalies]] — replay-guarded exact counts, densified with
@@ -360,8 +323,7 @@ object StreamingTimeSeries {
   def mergedWeeklyTable(spark: org.apache.spark.sql.SparkSession,
       targetDir: String): DataFrame =
     TimeSeries.denseWeekly(
-        spark.read.parquet(targetDir)
-          .dropDuplicates("key", "week_start", "batch_id").drop("batch_id")
+        readPartials(spark, targetDir, "key", "week_start")
           .groupBy("key", "week_start").agg(sum(col("freq")).as("freq")))
       .select("key", "week_start", "freq")
 
@@ -423,8 +385,7 @@ object StreamingTimeSeries {
     * batch faces). */
   private def mergedSparseWeekly(spark: org.apache.spark.sql.SparkSession,
       targetDir: String): DataFrame =
-    spark.read.parquet(targetDir)
-      .dropDuplicates("key", "week_start", "batch_id").drop("batch_id")
+    readPartials(spark, targetDir, "key", "week_start")
       .groupBy("key", "week_start").agg(sum(col("freq")).as("freq"))
 
   /** Whole-stream level-shift changepoints from the SAME stored weekly
@@ -530,35 +491,22 @@ object StreamingTimeSeries {
   def startDriftCountsQuery(events: DataFrame, groupCol: String,
       xCol: String, cohortExpr: String, edges: Seq[Double],
       targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF()
-        graft.operators.Stats
-          .binCounts(b, Seq(col(groupCol)), col(xCol), expr(cohortExpr),
-            edges)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/bins")
-        graft.operators.Stats
-          .valueCounts(b, Seq(col(groupCol)), col(xCol), expr(cohortExpr))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/values")
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (s"$targetDir/bins", b => graft.operators.Stats
+        .binCounts(b, Seq(col(groupCol)), col(xCol), expr(cohortExpr), edges)),
+      (s"$targetDir/values", b => graft.operators.Stats
+        .valueCounts(b, Seq(col(groupCol)), col(xCol), expr(cohortExpr))))
 
   private def mergedBins(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.mergeBinCounts(
-      Seq(spark.read.parquet(s"$targetDir/bins")
-        .dropDuplicates(groupCol, "__bin", "batch_id").drop("batch_id")),
+      Seq(readPartials(spark, s"$targetDir/bins", groupCol, "__bin")),
       Seq(groupCol))
 
   private def mergedValues(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.mergeValueCounts(
-      Seq(spark.read.parquet(s"$targetDir/values")
-        .dropDuplicates(groupCol, "__x", "batch_id").drop("batch_id")),
+      Seq(readPartials(spark, s"$targetDir/values", groupCol, "__x")),
       Seq(groupCol))
 
   /** Whole-stream PSI from the stored bin partials — bit-identical to
@@ -596,28 +544,22 @@ object StreamingTimeSeries {
   def startLevelCountsQuery(events: DataFrame, groupCol: String,
       levelCol: String, xCol: String, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .levelValueCounts(batch.toDF(), Seq(col(groupCol)),
-            col(levelCol), col(xCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/level_values")
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (s"$targetDir/level_values", b => graft.operators.Stats
+        .levelValueCounts(b, Seq(col(groupCol)), col(levelCol), col(xCol))))
+
+  private def mergedLevelValues(spark: SparkSession, targetDir: String,
+      groupCol: String): DataFrame =
+    graft.operators.Stats.mergeLevelValueCounts(
+      Seq(readPartials(spark, s"$targetDir/level_values", groupCol, "__l", "__x")),
+      Seq(groupCol))
 
   /** Whole-stream Kruskal–Wallis from the stored level-count partials
     * — bit-identical to the batch test over all data. */
   def mergedKruskalWallis(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.kruskalWallisFromLevelCounts(
-      graft.operators.Stats.mergeLevelValueCounts(
-        Seq(spark.read.parquet(s"$targetDir/level_values")
-          .dropDuplicates(groupCol, "__l", "__x", "batch_id")
-          .drop("batch_id")),
-        Seq(groupCol)))
+      mergedLevelValues(spark, targetDir, groupCol))
 
   /** Whole-stream Jonckheere–Terpstra ordered-trend test from the SAME
     * stored level-count partials as [[mergedKruskalWallis]] — a third
@@ -625,11 +567,7 @@ object StreamingTimeSeries {
   def mergedJonckheere(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.jonckheereFromLevelCounts(
-      graft.operators.Stats.mergeLevelValueCounts(
-        Seq(spark.read.parquet(s"$targetDir/level_values")
-          .dropDuplicates(groupCol, "__l", "__x", "batch_id")
-          .drop("batch_id")),
-        Seq(groupCol)))
+      mergedLevelValues(spark, targetDir, groupCol))
 
   /** Streaming survival maintenance — the ingestion face of
     * [[graft.operators.Stats.kaplanMeier]]: each micro-batch of CLOSED
@@ -643,28 +581,22 @@ object StreamingTimeSeries {
   def startSurvivalCountsQuery(subjects: DataFrame, groupCol: String,
       durationCol: String, eventCol: String, targetDir: String,
       checkpointDir: String) =
-    subjects
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .survivalCounts(batch.toDF(), Seq(groupCol),
-            col(durationCol), col(eventCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/survival_counts")
-      }
-      .start()
+    appendPartials(subjects.writeStream, checkpointDir)(
+      (s"$targetDir/survival_counts", b => graft.operators.Stats
+        .survivalCounts(b, Seq(groupCol), col(durationCol), col(eventCol))))
+
+  private def mergedSurvivalCounts(spark: SparkSession, targetDir: String,
+      groupCol: String): DataFrame =
+    graft.operators.Stats.mergeSurvivalCounts(
+      Seq(readPartials(spark, s"$targetDir/survival_counts", groupCol, "t")),
+      Seq(groupCol))
 
   /** Whole-stream Kaplan–Meier from the stored count deltas —
     * bit-identical to the batch estimator over all closed subjects. */
   def mergedKaplanMeier(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.kaplanMeierFromCounts(
-      graft.operators.Stats.mergeSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/survival_counts")
-          .dropDuplicates(groupCol, "t", "batch_id")
-          .drop("batch_id")),
-        Seq(groupCol)),
+      mergedSurvivalCounts(spark, targetDir, groupCol),
       Seq(groupCol))
 
   /** Streaming log-rank maintenance — the two-cohort companion of
@@ -675,27 +607,23 @@ object StreamingTimeSeries {
   def startCohortSurvivalCountsQuery(subjects: DataFrame,
       groupCol: String, durationCol: String, eventCol: String,
       cohortCol: String, targetDir: String, checkpointDir: String) =
-    subjects
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .cohortSurvivalCounts(batch.toDF(), Seq(groupCol),
-            col(durationCol), col(eventCol), col(cohortCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/cohort_surv_counts")
-      }
-      .start()
+    appendPartials(subjects.writeStream, checkpointDir)(
+      (s"$targetDir/cohort_surv_counts", b => graft.operators.Stats
+        .cohortSurvivalCounts(b, Seq(groupCol), col(durationCol), col(eventCol),
+          col(cohortCol))))
+
+  private def mergedCohortSurvivalCounts(spark: SparkSession,
+      targetDir: String, groupCol: String): DataFrame =
+    graft.operators.Stats.mergeCohortSurvivalCounts(
+      Seq(readPartials(spark, s"$targetDir/cohort_surv_counts", groupCol, "t")),
+      Seq(groupCol))
 
   /** Whole-stream log-rank from the stored cohort-split deltas —
     * bit-identical to the batch test over all closed subjects. */
   def mergedLogRank(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.logRankFromCounts(
-      graft.operators.Stats.mergeCohortSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/cohort_surv_counts")
-          .dropDuplicates(groupCol, "t", "batch_id").drop("batch_id")),
-        Seq(groupCol)),
+      mergedCohortSurvivalCounts(spark, targetDir, groupCol),
       Seq(groupCol))
 
   /** Whole-stream Nelson–Aalen cumulative hazard — a SECOND readout
@@ -705,11 +633,7 @@ object StreamingTimeSeries {
   def mergedNelsonAalen(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.nelsonAalenFromCounts(
-      graft.operators.Stats.mergeSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/survival_counts")
-          .dropDuplicates(groupCol, "t", "batch_id")
-          .drop("batch_id")),
-        Seq(groupCol)),
+      mergedSurvivalCounts(spark, targetDir, groupCol),
       Seq(groupCol))
 
   /** Whole-stream Gehan–Breslow weighted log-rank — a SECOND readout
@@ -719,10 +643,7 @@ object StreamingTimeSeries {
   def mergedGehanLogRank(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.gehanLogRankFromCounts(
-      graft.operators.Stats.mergeCohortSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/cohort_surv_counts")
-          .dropDuplicates(groupCol, "t", "batch_id").drop("batch_id")),
-        Seq(groupCol)),
+      mergedCohortSurvivalCounts(spark, targetDir, groupCol),
       Seq(groupCol))
 
   /** Streaming attribution maintenance (set face) — the ingestion face
@@ -734,17 +655,10 @@ object StreamingTimeSeries {
   def startMaskCountsQuery(events: DataFrame, userCol: String,
       channelCol: String, convertedCol: String, channels: Seq[String],
       targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Attribution
-          .maskConversionCounts(batch.toDF(), col(userCol),
-            col(channelCol), col(convertedCol), channels)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/mask_counts")
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (s"$targetDir/mask_counts", b => graft.operators.Attribution
+        .maskConversionCounts(b, col(userCol), col(channelCol), col(convertedCol),
+          channels)))
 
   /** Whole-stream Shapley attribution from the stored mask deltas —
     * bit-identical to the batch operator over all closed users. */
@@ -752,8 +666,7 @@ object StreamingTimeSeries {
       targetDir: String, channels: Seq[String]): DataFrame =
     graft.operators.Attribution.shapleyFromMaskCounts(
       graft.operators.Attribution.mergeMaskCounts(
-        Seq(spark.read.parquet(s"$targetDir/mask_counts")
-          .dropDuplicates("mask", "batch_id").drop("batch_id"))),
+        Seq(readPartials(spark, s"$targetDir/mask_counts", "mask"))),
       channels)
 
   /** Streaming position/time-decay attribution maintenance — the
@@ -768,18 +681,10 @@ object StreamingTimeSeries {
       convertedCol: String, channels: Seq[String],
       halfLifeDays: Double, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Attribution
-          .positionCreditCounts(batch.toDF(), col(userCol),
-            col(channelCol), col(tsCol), col(tieCol), col(convertedCol),
-            channels, halfLifeDays)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/position_credits")
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (s"$targetDir/position_credits", b => graft.operators.Attribution
+        .positionCreditCounts(b, col(userCol), col(channelCol), col(tsCol),
+          col(tieCol), col(convertedCol), channels, halfLifeDays)))
 
   /** Whole-stream position/time-decay attribution from the stored
     * credit deltas — bit-identical to the batch operator. */
@@ -787,8 +692,7 @@ object StreamingTimeSeries {
       targetDir: String, channels: Seq[String]): DataFrame =
     graft.operators.Attribution.positionFromCredits(
       graft.operators.Attribution.mergePositionCredits(
-        Seq(spark.read.parquet(s"$targetDir/position_credits")
-          .dropDuplicates("channel", "batch_id").drop("batch_id"))),
+        Seq(readPartials(spark, s"$targetDir/position_credits", "channel"))),
       channels)
 
   /** Streaming competing-risks maintenance — the ingestion face of
@@ -801,17 +705,10 @@ object StreamingTimeSeries {
   def startCauseSurvivalCountsQuery(subjects: DataFrame,
       groupCol: String, durationCol: String, causeCol: String,
       nCauses: Int, targetDir: String, checkpointDir: String) =
-    subjects
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .causeSurvivalCounts(batch.toDF(), Seq(groupCol),
-            col(durationCol), col(causeCol), nCauses)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/cause_surv_counts")
-      }
-      .start()
+    appendPartials(subjects.writeStream, checkpointDir)(
+      (s"$targetDir/cause_surv_counts", b => graft.operators.Stats
+        .causeSurvivalCounts(b, Seq(groupCol), col(durationCol), col(causeCol),
+          nCauses)))
 
   /** Whole-stream STRATIFIED log-rank from the same stored
     * cohort-split deltas the plain log-rank maintains, read with the
@@ -821,10 +718,7 @@ object StreamingTimeSeries {
       targetDir: String, stratumCol: String,
       maxTimes: Int = 1000): DataFrame =
     graft.operators.Stats.stratifiedLogRankFromCounts(
-      graft.operators.Stats.mergeCohortSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/cohort_surv_counts")
-          .dropDuplicates(stratumCol, "t", "batch_id").drop("batch_id")),
-        Seq(stratumCol)),
+      mergedCohortSurvivalCounts(spark, targetDir, stratumCol),
       Nil, stratumCol, maxTimes)
 
   /** Whole-stream Aalen–Johansen cumulative incidence from the stored
@@ -833,8 +727,7 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String, nCauses: Int): DataFrame =
     graft.operators.Stats.aalenJohansenFromCounts(
       graft.operators.Stats.mergeCauseSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/cause_surv_counts")
-          .dropDuplicates(groupCol, "t", "batch_id").drop("batch_id")),
+        Seq(readPartials(spark, s"$targetDir/cause_surv_counts", groupCol, "t")),
         Seq(groupCol), nCauses),
       Seq(groupCol), nCauses)
 
@@ -847,17 +740,9 @@ object StreamingTimeSeries {
   def startRatingCountsQuery(ratings: DataFrame, groupCol: String,
       itemCol: String, categoryCol: String, targetDir: String,
       checkpointDir: String) =
-    ratings
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .ratingCounts(batch.toDF(), Seq(groupCol), col(itemCol),
-            col(categoryCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/rating_counts")
-      }
-      .start()
+    appendPartials(ratings.writeStream, checkpointDir)(
+      (s"$targetDir/rating_counts", b => graft.operators.Stats
+        .ratingCounts(b, Seq(groupCol), col(itemCol), col(categoryCol))))
 
   /** Whole-stream Fleiss' κ from the stored rating-count deltas —
     * bit-identical to batch. */
@@ -865,9 +750,8 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.fleissKappaFromCounts(
       graft.operators.Stats.mergeRatingCounts(
-        Seq(spark.read.parquet(s"$targetDir/rating_counts")
-          .dropDuplicates(groupCol, "item", "category", "batch_id")
-          .drop("batch_id")),
+        Seq(readPartials(spark, s"$targetDir/rating_counts", groupCol, "item",
+          "category")),
         Seq(groupCol)),
       Seq(groupCol))
 
@@ -881,27 +765,22 @@ object StreamingTimeSeries {
   def startArmCountsQuery(events: DataFrame, groupCol: String,
       treatedCol: String, outcomeCol: String, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .armCounts(batch.toDF(), Seq(col(groupCol)), col(treatedCol),
-            col(outcomeCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/arm_counts")
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (s"$targetDir/arm_counts", b => graft.operators.Stats
+        .armCounts(b, Seq(col(groupCol)), col(treatedCol), col(outcomeCol))))
+
+  private def mergedArmCounts(spark: SparkSession, targetDir: String,
+      groupCol: String): DataFrame =
+    graft.operators.Stats.mergeArmCounts(
+      Seq(readPartials(spark, s"$targetDir/arm_counts", groupCol)),
+      Seq(groupCol))
 
   /** Whole-stream two-proportion uplift from the stored count deltas —
     * bit-identical to batch. */
   def mergedProportionUplift(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.proportionUpliftFromCounts(
-      graft.operators.Stats.mergeArmCounts(
-        Seq(spark.read.parquet(s"$targetDir/arm_counts")
-          .dropDuplicates(groupCol, "batch_id").drop("batch_id")),
-        Seq(groupCol)))
+      mergedArmCounts(spark, targetDir, groupCol))
 
   /** Whole-stream CMH stratified test from the SAME stored deltas,
     * read with the group key as the STRATUM — no new state, no new
@@ -911,10 +790,7 @@ object StreamingTimeSeries {
       targetDir: String, stratumCol: String,
       maxStrata: Int = 1000): DataFrame =
     graft.operators.Stats.cmhFromCounts(
-      graft.operators.Stats.mergeArmCounts(
-        Seq(spark.read.parquet(s"$targetDir/arm_counts")
-          .dropDuplicates(stratumCol, "batch_id").drop("batch_id")),
-        Seq(stratumCol)),
+      mergedArmCounts(spark, targetDir, stratumCol),
       Nil, stratumCol, maxStrata)
 
   /** Whole-stream always-valid p-value from the SAME stored deltas —
@@ -923,10 +799,7 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String, tauSq: Double = 1e-4,
       alpha: Double = 0.05): DataFrame =
     graft.operators.Stats.msprtFromCounts(
-      graft.operators.Stats.mergeArmCounts(
-        Seq(spark.read.parquet(s"$targetDir/arm_counts")
-          .dropDuplicates(groupCol, "batch_id").drop("batch_id")),
-        Seq(groupCol)), tauSq, alpha)
+      mergedArmCounts(spark, targetDir, groupCol), tauSq, alpha)
 
   /** Streaming interim-analysis maintenance — the ingestion face of
     * [[graft.operators.Stats.groupSequentialTest]]: arm-count deltas
@@ -936,18 +809,10 @@ object StreamingTimeSeries {
   def startArmCountsByLookQuery(events: DataFrame, groupCol: String,
       lookCol: String, treatedCol: String, outcomeCol: String,
       targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .armCounts(batch.toDF(),
-            Seq(col(groupCol), col(lookCol).cast("int").as("look")),
-            col(treatedCol), col(outcomeCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/arm_counts_by_look")
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (s"$targetDir/arm_counts_by_look", b => graft.operators.Stats
+        .armCounts(b, Seq(col(groupCol), col(lookCol).cast("int").as("look")),
+          col(treatedCol), col(outcomeCol))))
 
   /** Whole-stream group-sequential boundary readout from the stored
     * per-look deltas — bit-identical to the batch test. The interim
@@ -959,9 +824,7 @@ object StreamingTimeSeries {
       kind: String = "obf"): DataFrame =
     graft.operators.Stats.groupSequentialFromCounts(
       graft.operators.Stats.mergeArmCounts(
-        Seq(spark.read.parquet(s"$targetDir/arm_counts_by_look")
-          .dropDuplicates(groupCol, "look", "batch_id")
-          .drop("batch_id")),
+        Seq(readPartials(spark, s"$targetDir/arm_counts_by_look", groupCol, "look")),
         Seq(groupCol, "look")),
       Seq(groupCol), looks, kind)
 
@@ -975,17 +838,10 @@ object StreamingTimeSeries {
   def startCalibrationCountsQuery(events: DataFrame, groupCol: String,
       durationCol: String, eventCol: String, predCol: String,
       edges: Seq[Double], targetDir: String, checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Concordance
-          .calibrationCounts(batch.toDF(), Seq(groupCol),
-            col(durationCol), col(eventCol), col(predCol), edges)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/calibration_counts")
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (s"$targetDir/calibration_counts", b => graft.operators.Concordance
+        .calibrationCounts(b, Seq(groupCol), col(durationCol), col(eventCol),
+          col(predCol), edges)))
 
   /** Whole-stream calibration table from the stored deltas —
     * bit-identical to the batch frozen-edges face over all data. */
@@ -993,9 +849,8 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String, horizon: Double): DataFrame =
     graft.operators.Concordance.survivalCalibrationFromCounts(
       graft.operators.Concordance.mergeCalibrationCounts(
-        Seq(spark.read.parquet(s"$targetDir/calibration_counts")
-          .dropDuplicates(groupCol, "bin", "t", "batch_id")
-          .drop("batch_id")),
+        Seq(readPartials(spark, s"$targetDir/calibration_counts", groupCol,
+          "bin", "t")),
         Seq(groupCol)),
       Seq(groupCol), horizon)
 
@@ -1006,11 +861,7 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String,
       pairs: Seq[(Double, Double)]): DataFrame =
     graft.operators.Concordance.conditionalSurvivalFromCounts(
-      graft.operators.Stats.mergeSurvivalCounts(
-        Seq(spark.read.parquet(s"$targetDir/survival_counts")
-          .dropDuplicates(groupCol, "t", "batch_id")
-          .drop("batch_id")),
-        Seq(groupCol)),
+      mergedSurvivalCounts(spark, targetDir, groupCol),
       Seq(groupCol), pairs)
 
   /** Streaming ratio-metric experiment maintenance — the ingestion
@@ -1024,17 +875,10 @@ object StreamingTimeSeries {
       treatedCol: String, unitCol: String, numCol: String,
       denCol: String, quantScale: Double, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .ratioMoments(batch.toDF(), Seq(groupCol), col(treatedCol),
-            col(unitCol), col(numCol), col(denCol), quantScale)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/ratio_moments")
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (s"$targetDir/ratio_moments", b => graft.operators.Stats
+        .ratioMoments(b, Seq(groupCol), col(treatedCol), col(unitCol),
+          col(numCol), col(denCol), quantScale)))
 
   /** Whole-stream delta-method ratio uplift from the stored moment
     * deltas — bit-identical to the batch operator over closed units. */
@@ -1042,8 +886,7 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.ratioFromMoments(
       graft.operators.Stats.mergeRatioMoments(
-        Seq(spark.read.parquet(s"$targetDir/ratio_moments")
-          .dropDuplicates(groupCol, "arm", "batch_id").drop("batch_id")),
+        Seq(readPartials(spark, s"$targetDir/ratio_moments", groupCol, "arm")),
         Seq(groupCol)),
       Seq(groupCol))
 
@@ -1057,17 +900,10 @@ object StreamingTimeSeries {
       channelCol: String, tsCol: String, tieCol: String,
       convertedCol: String, channels: Seq[String], targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Attribution
-          .transitionCounts(batch.toDF(), col(userCol), col(channelCol),
-            col(tsCol), col(tieCol), col(convertedCol), channels)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/transition_counts")
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (s"$targetDir/transition_counts", b => graft.operators.Attribution
+        .transitionCounts(b, col(userCol), col(channelCol), col(tsCol),
+          col(tieCol), col(convertedCol), channels)))
 
   /** Whole-stream Markov removal effects from the stored transition
     * deltas — bit-identical to the batch operator. */
@@ -1076,8 +912,7 @@ object StreamingTimeSeries {
       iters: Int = 60): DataFrame =
     graft.operators.Attribution.markovFromCounts(
       graft.operators.Attribution.mergeTransitionCounts(
-        Seq(spark.read.parquet(s"$targetDir/transition_counts")
-          .dropDuplicates("from", "to", "batch_id").drop("batch_id"))),
+        Seq(readPartials(spark, s"$targetDir/transition_counts", "from", "to"))),
       channels, iters)
 
   /** Streaming record-linkage maintenance — the ingestion face of
@@ -1093,17 +928,10 @@ object StreamingTimeSeries {
   def startAgreementCountsQuery(pairs: DataFrame, matchCol: String,
       fieldCols: Seq[(String, String)], targetDir: String,
       checkpointDir: String) =
-    pairs
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Linkage
-          .agreementCounts(batch.toDF(), col(matchCol),
-            fieldCols.map { case (n, c) => n -> col(c) })
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/agreements")
-      }
-      .start()
+    appendPartials(pairs.writeStream, checkpointDir)(
+      (s"$targetDir/agreements", b => graft.operators.Linkage
+        .agreementCounts(b, col(matchCol),
+          fieldCols.map { case (n, c) => n -> col(c) })))
 
   /** Whole-stream linkage weights from the stored agreement partials —
     * bit-identical to batch [[graft.operators.Linkage.trainWeights]]. */
@@ -1111,8 +939,7 @@ object StreamingTimeSeries {
       targetDir: String, smoothing: Int = 1): DataFrame =
     graft.operators.Linkage.weightsFromCounts(
       graft.operators.Linkage.mergeAgreementCounts(
-        Seq(spark.read.parquet(s"$targetDir/agreements")
-          .dropDuplicates("field", "batch_id").drop("batch_id"))),
+        Seq(readPartials(spark, s"$targetDir/agreements", "field"))),
       smoothing)
 
   /** Streaming categorical-association maintenance — the ingestion face
@@ -1128,17 +955,9 @@ object StreamingTimeSeries {
   def startContingencyCellsQuery(events: DataFrame, groupCol: String,
       aCol: String, bCol: String, targetDir: String,
       checkpointDir: String) =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats
-          .contingencyCells(batch.toDF(), Seq(col(groupCol)), col(aCol),
-            col(bCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$targetDir/cells")
-      }
-      .start()
+    appendPartials(events.writeStream, checkpointDir)(
+      (s"$targetDir/cells", b => graft.operators.Stats
+        .contingencyCells(b, Seq(col(groupCol)), col(aCol), col(bCol))))
 
   /** Whole-stream χ²/Cramér's V/MI from the stored cell partials —
     * bit-identical to the batch
@@ -1147,9 +966,7 @@ object StreamingTimeSeries {
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.contingencyFromCells(
       graft.operators.Stats.mergeContingencyCells(
-        Seq(spark.read.parquet(s"$targetDir/cells")
-          .dropDuplicates(groupCol, "__a", "__b", "batch_id")
-          .drop("batch_id")),
+        Seq(readPartials(spark, s"$targetDir/cells", groupCol, "__a", "__b")),
         Seq(groupCol)))
 
   /** Streaming cohort-retention maintenance — the ingestion face of
@@ -1257,15 +1074,8 @@ object StreamingTimeSeries {
     * bigramCounts output schema). */
   def startLmCountsQuery(docs: DataFrame, textCol: String,
       targetDir: String, checkpointDir: String) =
-    docs
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.NgramLm.bigramCountsRaw(batch.toDF(), col(textCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(docs.writeStream, checkpointDir)(
+      (targetDir, b => graft.operators.NgramLm.bigramCountsRaw(b, col(textCol))))
 
   /** The capped whole-stream LM from the stored bigram deltas —
     * bit-identical to the batch-trained model. */
@@ -1273,8 +1083,7 @@ object StreamingTimeSeries {
       targetDir: String, maxBigrams: Int = 250000): DataFrame =
     graft.operators.NgramLm.capBigrams(
       graft.operators.NgramLm.mergeBigramCounts(
-        Seq(spark.read.parquet(targetDir)
-          .dropDuplicates("w1", "w2", "batch_id").drop("batch_id"))),
+        Seq(readPartials(spark, targetDir, "w1", "w2"))),
       maxBigrams)
 
   /** Streaming calibration maintenance — the ingestion face of
@@ -1282,24 +1091,16 @@ object StreamingTimeSeries {
     * [[graft.operators.Stats.calibrationError]]: each micro-batch
     * reduces to ≤ groups × bins rows of exact BIGINT partials (count,
     * positives, quantized score/squared-error mass) appended with the
-    * batch_id replay guard (the moments-sink posture — partials are
-    * deterministic per batch, sums would double-count). A model's
+    * batch_id replay guard (`appendPartials`). A model's
     * live calibration dashboard reads the merged summary, never the
     * score history. */
   def startCalibrationPartialsQuery(scored: DataFrame, groupCol: String,
       scoreCol: String, labelCol: String, targetDir: String,
       checkpointDir: String, nBins: Int = 10, quantScale: Double = 1e9) =
-    scored
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats.calibrationPartials(batch.toDF(),
-            Seq(col(groupCol)), col(scoreCol), col(labelCol), nBins,
-            quantScale)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(scored.writeStream, checkpointDir)(
+      (targetDir, b => graft.operators.Stats
+        .calibrationPartials(b, Seq(col(groupCol)), col(scoreCol), col(labelCol),
+          nBins, quantScale)))
 
   /** Whole-stream reliability table from the stored partials —
     * replay-guarded merge, bit-identical to the one-shot batch table. */
@@ -1321,8 +1122,7 @@ object StreamingTimeSeries {
       spark: org.apache.spark.sql.SparkSession, targetDir: String,
       groupCol: String): DataFrame =
     graft.operators.Stats.mergeCalibrationPartials(
-      Seq(spark.read.parquet(targetDir)
-        .dropDuplicates(groupCol, "bin", "batch_id").drop("batch_id")),
+      Seq(readPartials(spark, targetDir, groupCol, "bin")),
       Seq(groupCol))
 
   /** Streaming labeling-QA maintenance — the ingestion face of
@@ -1336,16 +1136,9 @@ object StreamingTimeSeries {
   def startConfusionCountsQuery(preds: DataFrame, groupCol: String,
       truthCol: String, predCol: String, targetDir: String,
       checkpointDir: String) =
-    preds
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Stats.confusionCounts(batch.toDF(),
-            Seq(col(groupCol)), col(truthCol), col(predCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(targetDir)
-      }
-      .start()
+    appendPartials(preds.writeStream, checkpointDir)(
+      (targetDir, b => graft.operators.Stats
+        .confusionCounts(b, Seq(col(groupCol)), col(truthCol), col(predCol))))
 
   /** Whole-stream per-class P/R/F1 from the stored confusion counts. */
   def mergedClassificationReport(spark: org.apache.spark.sql.SparkSession,
@@ -1369,9 +1162,7 @@ object StreamingTimeSeries {
   private def mergedConfusion(spark: org.apache.spark.sql.SparkSession,
       targetDir: String, groupCol: String): DataFrame =
     graft.operators.Stats.mergeConfusionCounts(
-      Seq(spark.read.parquet(targetDir)
-        .dropDuplicates(groupCol, "truth", "pred", "batch_id")
-        .drop("batch_id")),
+      Seq(readPartials(spark, targetDir, groupCol, "truth", "pred")),
       Seq(groupCol))
 
   /** Streaming association-rule maintenance — the ingestion face of

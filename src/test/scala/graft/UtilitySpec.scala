@@ -864,6 +864,29 @@ class UtilitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a1 == a2)
   }
 
+  test("ShuffleTimer counts a stage's shuffle bytes as soon as its action returns") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    // a slow listener ahead of the timer's on the same bus queue: the
+    // action returns before the timer hears of the exchange's stage, so
+    // only a drain of the bus gets its bytes into this stage's line
+    val slow = new SparkListener {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        Thread.sleep(1000)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    val out = new java.io.ByteArrayOutputStream()
+    try Console.withOut(out) {
+      new ShuffleTimer(spark).timedShuffled("md5_repartition") {
+        spark.range(200000).select(md5(col("id").cast("string")).as("h"))
+          .repartition(4).queryExecution.toRdd.count()
+      }
+    } finally spark.sparkContext.removeSparkListener(slow)
+    val line = out.toString.trim
+    assert(line.startsWith("""{"stage":"md5_repartition","rows":200000,"""), line)
+    val mb = """"shuffle_mb":([0-9.]+)""".r.findFirstMatchIn(line).get.group(1).toDouble
+    assert(mb > 0.0, line)
+  }
+
   test("multimodal describe + resizeMeta keep payload opaque (metadata only)") {
     import spark.implicits._
     val items = Multimodal.fromDocuments(spark,

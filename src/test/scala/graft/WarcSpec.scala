@@ -149,6 +149,24 @@ class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.format("warc").load(dir).count() === 15)
   }
 
+  test("write and read resolve paths with the session's Hadoop settings") {
+    import spark.implicits._
+    // `graftlocal:` is a file system known only through a session setting;
+    // uncached, so executors cannot reuse the driver's instance
+    val dir = "graftlocal:/tmp/warc_spec_session_fs"
+    val settings = Seq("fs.graftlocal.impl" -> classOf[GraftLocalFileSystem].getName,
+      "fs.graftlocal.impl.disable.cache" -> "true")
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      (1 to 6).map(i => (s"<urn:uuid:s-$i>", s"p$i".getBytes(UTF_8)))
+        .toDF("record_id", "payload").repartition(2)
+        .write.format("warc").mode("overwrite").save(dir)
+      val back = spark.read.format("warc").option("maxSplitBytes", "64").load(dir)
+        .select("record_id").as[String].collect().sorted
+      assert(back.toSeq === (1 to 6).map(i => s"<urn:uuid:s-$i>").sorted)
+    } finally settings.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("a corpus-scale round-trip: documents → WARC → identical stats") {
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
     val dir = "/tmp/warc_spec_docs"
